@@ -546,6 +546,20 @@ object Main {
     rc
   }
 
+  /** The serving session: the one engine definition Bench, Verify and
+    * the end-to-end benchmark run ([[graft.GraftSession.builder]]), so
+    * what is served is what was verified and measured. `SPARK_MASTER`
+    * names the master on a cluster; standalone runs (sbt runMain) use
+    * all local cores. The shuffle width is `SPARK_GRAFT_CPUS`, else the
+    * local core count.
+    */
+  def session(env: Map[String, String]): SparkSession.Builder =
+    graft.GraftSession.builder(
+      env.getOrElse("SPARK_MASTER", "local[*]"),
+      env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors().toString))
+      .appName("graft-adapter")
+
   def main(args: Array[String]): Unit =
     if (args.headOption.contains("check-rules"))
       sys.exit(checkRules(args.toSeq.drop(1)))
@@ -555,15 +569,7 @@ object Main {
         if (!err.startsWith("usage:")) System.err.println(CliConfig.usage())
         sys.exit(2)
       case Right(cfg) =>
-        val spark = SparkSession.builder()
-          .appName("graft-adapter")
-          // spark-submit provides the real master on a cluster; standalone
-          // runs (sbt runMain) fall back to all local cores
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.extensions", "graft.GraftExtensions")
-          .getOrCreate()
+        val spark = session(sys.env).getOrCreate()
         val server = Cli.buildServer(spark, cfg).start()
         println(s"listening on :${server.boundPort}, storing to ${cfg.tablePath}")
         // serve forever, like ListenAndServe (main.go:374)

@@ -10,6 +10,7 @@ import graft.sinks.FanOut
 import java.net.InetSocketAddress
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.LocalRows
 
 /** The HTTP front door — the reference's serve() loop re-expressed over
   * the Spark engine (reference: main.go:285-374):
@@ -116,10 +117,25 @@ class Server(spark: SparkSession, tablePath: String,
     */
   @volatile private var cachedTable: Option[DataFrame] = None
 
-  /** Serializes parquet COMMITS to the main table (see the append site:
-    * concurrent append jobs to one path share the Hadoop staging dir).
+  /** Serializes every COMMIT to the store: concurrent append jobs to one
+    * parquet path share the Hadoop staging dir (`_temporary/0`) and
+    * silently LOSE rows (exposed by the s3_remote_write_chain entry), and
+    * the admin rewrites, snapshots and scrapes must not interleave with
+    * an append. `/write`'s main-table appends take it through
+    * [[sampleCommits]].
     */
-  private val appendLock = new Object
+  private[graft] val appendLock = new Object
+
+  /** Group commit of `/write`'s main-table appends on [[appendLock]]:
+    * each request queues its already-encoded rows; whoever next holds
+    * the lock commits every queued request's rows as ONE append (one
+    * Spark job, one set of files per touched date, one retention sweep)
+    * and answers them all. Concurrent senders therefore stop paying one
+    * whole commit each while they wait; ack semantics are unchanged —
+    * a request returns only after the commit holding its rows.
+    */
+  private[graft] val sampleCommits =
+    new GroupCommit[LocalRows](appendLock)(commitSamples)
 
   private[graft] def storedTable(): DataFrame = synchronized {
     cachedTable.getOrElse {
@@ -270,14 +286,12 @@ class Server(spark: SparkSession, tablePath: String,
           // a 400 would advertise the full counts as written and
           // defeat the header's purpose; CT-zero injections are
           // synthetic and not counted)
+          val exemplars = graft.codec.Prompb2.exemplarsToV1(req)
           written = Some((
             scalar.timeseries.map(_.samples.size).sum.toLong,
-            graft.codec.Prompb2.histogramsToV1(req)
-              .map(_.histograms.size).sum.toLong,
-            graft.codec.Prompb2.exemplarsToV1(req)
-              .map(_.exemplars.size).sum.toLong))
-          (withCt, graft.codec.Prompb2.exemplarsToV1(req),
-            graft.codec.Prompb2.metadataToV1(req))
+            hists.map(_.histograms.size).sum.toLong,
+            exemplars.map(_.exemplars.size).sum.toLong))
+          (withCt, exemplars, graft.codec.Prompb2.metadataToV1(req))
         } else {
           // ONE walk decodes scalars, native histograms (field 4 —
           // flattened to their classic le-bucket view, the scalar
@@ -686,6 +700,36 @@ class Server(spark: SparkSession, tablePath: String,
     }
   }
 
+  /** One main-table commit for a group of `/write` requests
+    * ([[sampleCommits]]; runs under [[appendLock]]): the group's rows as
+    * one relation → F1 filter → canonical rows → one append, then one
+    * retention sweep and one plan-cache invalidation. The group's rows
+    * share one `updated` value (one `current_timestamp()` per query);
+    * concurrent requests had no defined order before either, and
+    * `Rollup.dedupLatest` breaks `updated` ties on `val`.
+    */
+  private def commitSamples(group: Seq[LocalRows]): Unit = {
+    val batch = LocalRows.concat(group)
+    WritePipeline.append(
+      WritePipeline.toMetricRows(
+        WritePipeline.dropNonFinite(batch.toDF(spark))),
+      tablePath, rowsHint = batch.size.toLong)
+    // the retention sweep is a directory listing + partition drops —
+    // cheap enough to run on every commit, like Prometheus's
+    // head-truncation cadence. The SIDE tables age on the same horizon:
+    // exemplars and stale markers past retention are as unreadable as
+    // the samples they annotate, and would otherwise grow forever.
+    if (retentionSec > 0) {
+      val now = System.currentTimeMillis() / 1000
+      graft.engine.Admin.enforceRetention(tablePath, retentionSec, now)
+      Seq(exemplarPath, stalePath, histPath).foreach { p =>
+        if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
+          graft.engine.Admin.enforceRetention(p, retentionSec, now)
+      }
+    }
+    invalidateTable()
+  }
+
   private def ingestDecoded(ex: HttpExchange,
                             wr: Prompb.PWriteRequest,
                             writtenStats: Option[(Long, Long, Long)] =
@@ -714,38 +758,16 @@ class Server(spark: SparkSession, tablePath: String,
         java.lang.Double.doubleToRawLongBits(s.value) == StaleNaNBits)
       if (staleMarkers.nonEmpty) appendStaleMarkers(staleMarkers)
       import spark.implicits._
-      val flat = samples.toDF()
+      // encoded once, here, outside the commit lock: the extra sinks
+      // read `flat`, and the group commit reuses the same rows
+      val encoded = LocalRows(samples)
+      val flat = encoded.toDF(spark)
       val table: (String, DataFrame => graft.sinks.Transport.WriteStats) =
-        "parquet" -> { df =>
-          val rows = WritePipeline.toMetricRows(WritePipeline.dropNonFinite(df))
-          // CONCURRENT writers share one Hadoop staging dir
-          // (_temporary/0) per output path: two unserialized append
-          // jobs clobber each other's staging and silently LOSE rows
-          // (exposed by the s3_remote_write_chain entry — concurrent
-          // remote-write senders are the normal case, not the edge).
-          // Only the commit serializes; decode and row prep above stay
-          // concurrent, and executors parallelize within each append.
-          appendLock.synchronized {
-            WritePipeline.append(rows, tablePath,
-              rowsHint = samples.size.toLong)
-            // the retention sweep is a directory listing + partition
-            // drops — cheap enough to run on every committed batch,
-            // like Prometheus's head-truncation cadence. The SIDE
-            // tables age on the same horizon: exemplars and stale
-            // markers past retention are as unreadable as the samples
-            // they annotate, and would otherwise grow forever.
-            if (retentionSec > 0) {
-              val now = System.currentTimeMillis() / 1000
-              graft.engine.Admin.enforceRetention(tablePath, retentionSec,
-                now)
-              Seq(exemplarPath, stalePath, histPath).foreach { p =>
-                if (java.nio.file.Files.isDirectory(
-                    java.nio.file.Paths.get(p)))
-                  graft.engine.Admin.enforceRetention(p, retentionSec, now)
-              }
-            }
-          }
-          invalidateTable()
+        "parquet" -> { _ =>
+          // only the commit serializes; decode and row encoding above
+          // stay concurrent, and requests that queue on the lock share
+          // one append (see commitSamples)
+          sampleCommits.submit(encoded)
           // The decoded request size IS the row count of `df` — counting
           // it again would launch a second Spark job per micro-batch
           // purely for the stat (the reference likewise reports

@@ -52,8 +52,14 @@ object FanOut {
     // computing it eagerly costs one full job per ingest batch that the
     // success path throws away — lazy keeps the failure contract intact
     // at zero cost to the happy path (optimization guide §1.2: don't
-    // compute things you discard)
-    lazy val total = batch.count()
+    // compute things you discard). The count itself can throw too (the
+    // sink failure may BE a lineage/executor failure): the Try keeps a
+    // throw from escaping a sink's Future — which would lose the other
+    // sinks' outcomes and break the error-isolation contract (reference
+    // main.go:396-406) — and, unlike a throwing lazy initializer, runs
+    // the count job at most once however many sinks fail. -1 = size
+    // unknown.
+    lazy val total = scala.util.Try(batch.count()).getOrElse(-1L)
     try {
       val outcomes = sinks.map { case (name, write) =>
         Future {
@@ -64,13 +70,7 @@ object FanOut {
             SinkOutcome(name, st.sent, st.failed, st.error, secs)
           } catch {
             case e: Throwable =>
-              // the count itself can throw too (the sink failure may BE a
-              // lineage/executor failure) — a second throw here would
-              // escape the Future and fail the whole fan-out, losing the
-              // other sinks' outcomes and breaking the error-isolation
-              // contract (reference main.go:396-406). -1 = size unknown.
-              val failedTotal = scala.util.Try(total).getOrElse(-1L)
-              SinkOutcome(name, 0L, failedTotal,
+              SinkOutcome(name, 0L, total,
                 Some(Option(e.getMessage).getOrElse(e.getClass.getName)), secs)
           }
         }

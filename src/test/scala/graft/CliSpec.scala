@@ -330,4 +330,26 @@ class CliSpec extends SparkSpec {
     assert(Main.checkRules(Seq(good.toString, badYaml.toString)) == 1)
     assert(Main.checkRules(Nil) == 2)
   }
+
+  test("the served session is the GraftSession engine: every engineConf, " +
+       "shuffle width from SPARK_GRAFT_CPUS else the core count") {
+    // the builder's pending options (JVM-public accessor): reading them
+    // pins the definition without starting a second session in this JVM
+    def options(env: Map[String, String]): Map[String, String] = {
+      val b = Main.session(env)
+      b.getClass.getMethod("options").invoke(b)
+        .asInstanceOf[scala.collection.Map[String, String]].toMap
+    }
+    val dflt = options(Map.empty)
+    GraftSession.engineConfs.foreach { case (k, v) =>
+      assert(dflt.get(k).contains(v), k)
+    }
+    assert(dflt("spark.master") == "local[*]")
+    assert(dflt("spark.sql.shuffle.partitions") ==
+      Runtime.getRuntime.availableProcessors().toString)
+    val set = options(Map("SPARK_MASTER" -> "local[2]",
+      "SPARK_GRAFT_CPUS" -> "8"))
+    assert(set("spark.master") == "local[2]")
+    assert(set("spark.sql.shuffle.partitions") == "8")
+  }
 }

@@ -302,6 +302,89 @@ class ServerSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("serve: 8 concurrent /write batches commit as one group — every " +
+       "row stored exactly once, v2 written-stats stay per request") {
+    val table = Files.createTempDirectory("graft_srvgc").toString + "/metrics"
+    val server = new Server(spark, table).start()
+    val base = s"http://localhost:${server.boundPort}"
+    // batch i: i+1 series of 3 samples, no series shared between
+    // batches; odd batches go as RW 2.0, batch 0 carries one NaN (F1
+    // must still drop it inside a group)
+    val batches = (0 until 8).map { i =>
+      PWriteRequest((0 to i).map { s =>
+        PTimeSeries(
+          Seq(PLabel("__name__", "gc_m"), PLabel("batch", s"b$i"),
+            PLabel("s", s"$s")),
+          (0 until 3).map(j => PSample(
+            if (i == 0 && j == 2) Double.NaN else i * 100 + s * 10 + j + 0.5,
+            86400000L * (j + 1) + i * 1000L)))
+      })
+    }
+    def send(i: Int): (Int, Option[String]) = {
+      val conn = java.net.URI.create(s"$base/write").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setDoOutput(true)
+      val body =
+        if (i % 2 == 1) {
+          conn.setRequestProperty("Content-Type",
+            "application/x-protobuf;proto=io.prometheus.write.v2.Request")
+          graft.codec.Prompb2.encodeRequest(
+            graft.codec.Prompb2.fromV1(batches(i)))
+        } else Prompb.encodeWriteRequest(batches(i))
+      conn.getOutputStream.write(Prompb.snappyCompress(body))
+      val out = (conn.getResponseCode, Option(conn.getHeaderField(
+        "X-Prometheus-Remote-Write-Samples-Written")))
+      conn.disconnect()
+      out
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      // hold the commit lock until all 8 requests are queued behind it:
+      // whoever takes it next commits all 8 as ONE group
+      val pending = server.appendLock.synchronized {
+        val fs = (0 until 8).map(i => pool.submit(
+          new java.util.concurrent.Callable[(Int, Option[String])] {
+            def call(): (Int, Option[String]) = send(i)
+          }))
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (server.sampleCommits.queued < 8) {
+          assert(System.nanoTime() < deadline,
+            s"${server.sampleCommits.queued} of 8 requests queued")
+          Thread.sleep(10)
+        }
+        fs
+      }
+      val replies = pending.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(replies.map(_._1) == Seq.fill(8)(200))
+      replies.zipWithIndex.foreach { case ((_, written), i) =>
+        // v2: this request's own count (NaN included — it was received),
+        // never the group's total; v1: no header
+        val own = batches(i).timeseries.map(_.samples.size).sum
+        assert(written == (if (i % 2 == 1) Some(own.toString) else None),
+          s"batch $i")
+      }
+      val expected = for {
+        b <- batches; ts <- b.timeseries; smp <- ts.samples
+        if !smp.value.isNaN
+      } yield (ts.labels.map(l => s"${l.name}=${l.value}").sorted.mkString(","),
+        smp.timestampMs / 1000, smp.value)
+      val stored = spark.read.parquet(table).collect().toSeq.map { r =>
+        (r.getAs[scala.collection.Seq[String]]("tags").mkString(","),
+          r.getAs[java.sql.Timestamp]("ts").getTime / 1000,
+          r.getAs[Double]("val"))
+      }
+      assert(stored.size == expected.size, "no batch lost or duplicated")
+      // order-independent: equal multisets, and equal checksums over them
+      assert(stored.sortBy(_.toString) == expected.sortBy(_.toString))
+      assert(stored.map(_.hashCode.toLong).sum ==
+        expected.map(_.hashCode.toLong).sum)
+      // one group → one commit → one `updated` value for all its rows
+      assert(spark.read.parquet(table).select("updated").distinct()
+        .count() == 1)
+    } finally { pool.shutdownNow(); server.stop() }
+  }
+
   test("serve: /otlp/v1/metrics ingests OTLP gauge points into the " +
        "same store") {
     val table = Files.createTempDirectory("graft_srvotlp").toString + "/metrics"

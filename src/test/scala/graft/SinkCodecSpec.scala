@@ -111,4 +111,27 @@ class SinkCodecSpec extends SparkSpec {
     assert(byName("boom").error.exists(_.contains("sink down")))
     assert(okWrites == 1)
   }
+
+  test("S3: when the batch itself fails, its count runs once for all " +
+       "failing sinks and reports -1") {
+    val boom = udf { (x: Long) =>
+      FanOutCountProbe.calls.incrementAndGet()
+      if (x >= 0) throw new RuntimeException("lineage down")
+      true
+    }.asNondeterministic()
+    FanOutCountProbe.calls.set(0)
+    val batch = spark.range(1).toDF().filter(boom(col("id")))
+    val outcomes = FanOut.fanOut(batch,
+      Seq("a", "b", "c").map(n => n -> ((_: org.apache.spark.sql.DataFrame) =>
+        throw new RuntimeException(s"$n down"))))
+    assert(outcomes.map(_.failed) == Seq(-1L, -1L, -1L))
+    assert(FanOutCountProbe.calls.get == 1,
+      "a throwing count must not be retried per failing sink")
+  }
+}
+
+/** Counts evaluations of the failing batch (local mode: tasks share the
+  * driver JVM). */
+object FanOutCountProbe {
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
 }

@@ -61,6 +61,16 @@ object WritePipeline {
       current_timestamp().as("updated"))
   }
 
+  /** Whether [[toMetricRows]] can convert a sample's `timestampMs`:
+    * `timestamp_seconds` turns the whole seconds into microseconds with
+    * an exact multiply and throws past `Long.MaxValue` µs (about year
+    * 294247, i.e. ~9.2e15 ms — a nanosecond timestamp sent in the ms
+    * field overflows). Computed the way the column expression does it:
+    * double division, then truncation to long.
+    */
+  def storableTimestamp(timestampMs: Long): Boolean =
+    math.abs((timestampMs / 1000.0).toLong) <= Long.MaxValue / 1000000L
+
   /** S4: append a batch to the metrics table.
     *
     * Scale design: partitioned by `date` (≙ MergeTree partition key) and

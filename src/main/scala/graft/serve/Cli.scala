@@ -551,14 +551,19 @@ object Main {
     * what is served is what was verified and measured. `SPARK_MASTER`
     * names the master on a cluster; standalone runs (sbt runMain) use
     * all local cores. The shuffle width is `SPARK_GRAFT_CPUS`, else the
-    * local core count.
+    * local core count on a local master, else 32 on a cluster (the
+    * driver's own core count says nothing about the executors'). The
+    * engine definition also turns the Spark UI off and sets the session
+    * time zone to UTC on every master, spark-submit included.
     */
-  def session(env: Map[String, String]): SparkSession.Builder =
-    graft.GraftSession.builder(
-      env.getOrElse("SPARK_MASTER", "local[*]"),
-      env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString))
-      .appName("graft-adapter")
+  def session(env: Map[String, String]): SparkSession.Builder = {
+    val master = env.getOrElse("SPARK_MASTER", "local[*]")
+    val width = env.getOrElse("SPARK_GRAFT_CPUS",
+      if (master.startsWith("local"))
+        Runtime.getRuntime.availableProcessors().toString
+      else "32")
+    graft.GraftSession.builder(master, width).appName("graft-adapter")
+  }
 
   def main(args: Array[String]): Unit =
     if (args.headOption.contains("check-rules"))

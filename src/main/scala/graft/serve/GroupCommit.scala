@@ -13,8 +13,14 @@ import scala.util.{Failure, Success, Try}
   * `commit` once over the whole group, and hands the outcome to every
   * member before releasing the lock. A FOLLOWER finds its outcome
   * already set when it gets the lock and returns it. So every caller
-  * returns only after the commit that holds its item has finished, and
-  * a commit that throws fails exactly the callers in its group.
+  * returns only after the commit that holds its item has finished.
+  *
+  * Failures stay per item: when the commit of a group of more than one
+  * throws, the leader (still under the lock) commits each member alone,
+  * so one item the commit rejects fails only its own caller, and a
+  * failure that every commit hits (say, a full disk) fails each caller
+  * with its own error. `commit` must therefore leave nothing behind
+  * when it throws, as a Spark write job does when it aborts.
   *
   * The queue needs no bound: each queued item's caller is blocked in
   * [[submit]], so it holds at most one item per calling thread. Other
@@ -46,10 +52,14 @@ private[graft] final class GroupCommit[A](lock: AnyRef)(commit: Seq[A] => Unit) 
         if (mine.outcome == null) {
           val group = Iterator.continually(queue.poll())
             .takeWhile(_ != null).toVector
-          val outcome =
-            try Success(commit(group.map(_.item)))
+          def attempt(slots: Seq[Slot]): Try[Unit] =
+            try Success(commit(slots.map(_.item)))
             catch { case e: Throwable => Failure(e) }
-          group.foreach(_.outcome = outcome)
+          attempt(group) match {
+            case Failure(_) if group.size > 1 =>
+              group.foreach(s => s.outcome = attempt(Seq(s)))
+            case outcome => group.foreach(_.outcome = outcome)
+          }
         }
       }
     }

@@ -132,7 +132,11 @@ class Server(spark: SparkSession, tablePath: String,
     * Spark job, one set of files per touched date, one retention sweep)
     * and answers them all. Concurrent senders therefore stop paying one
     * whole commit each while they wait; ack semantics are unchanged —
-    * a request returns only after the commit holding its rows.
+    * a request returns only after the commit holding its rows. A group
+    * whose append fails is recommitted one request at a time, so a
+    * request fails only when its own rows cannot be stored; rows the
+    * canonical conversion cannot represent are refused per request
+    * before they are queued ([[WritePipeline.storableTimestamp]]).
     */
   private[graft] val sampleCommits =
     new GroupCommit[LocalRows](appendLock)(commitSamples)
@@ -714,18 +718,25 @@ class Server(spark: SparkSession, tablePath: String,
       WritePipeline.toMetricRows(
         WritePipeline.dropNonFinite(batch.toDF(spark))),
       tablePath, rowsHint = batch.size.toLong)
-    // the retention sweep is a directory listing + partition drops —
+    // the rows are stored: nothing below may throw, or the group commit
+    // would recommit (store again) each member.
+    // The retention sweep is a directory listing + partition drops —
     // cheap enough to run on every commit, like Prometheus's
-    // head-truncation cadence. The SIDE tables age on the same horizon:
-    // exemplars and stale markers past retention are as unreadable as
-    // the samples they annotate, and would otherwise grow forever.
-    if (retentionSec > 0) {
+    // head-truncation cadence; one that fails is retried by the next
+    // commit. The SIDE tables age on the same horizon: exemplars and
+    // stale markers past retention are as unreadable as the samples
+    // they annotate, and would otherwise grow forever.
+    if (retentionSec > 0) try {
       val now = System.currentTimeMillis() / 1000
       graft.engine.Admin.enforceRetention(tablePath, retentionSec, now)
       Seq(exemplarPath, stalePath, histPath).foreach { p =>
         if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
           graft.engine.Admin.enforceRetention(p, retentionSec, now)
       }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] retention sweep failed: ${
+          Option(e.getMessage).getOrElse(e.getClass.getName)}")
     }
     invalidateTable()
   }
@@ -764,6 +775,13 @@ class Server(spark: SparkSession, tablePath: String,
       val flat = encoded.toDF(spark)
       val table: (String, DataFrame => graft.sinks.Transport.WriteStats) =
         "parquet" -> { _ =>
+          // a timestamp the canonical rows cannot hold fails THIS
+          // request's table write, as its own append job would; it must
+          // not reach a group append shared with other requests
+          samples.find(s => !s.value.isNaN && !s.value.isInfinite &&
+              !WritePipeline.storableTimestamp(s.timestampMs))
+            .foreach(s => throw new IllegalArgumentException(
+              s"sample timestamp ${s.timestampMs} ms is out of range"))
           // only the commit serializes; decode and row encoding above
           // stay concurrent, and requests that queue on the lock share
           // one append (see commitSamples)

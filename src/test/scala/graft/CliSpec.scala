@@ -332,7 +332,8 @@ class CliSpec extends SparkSpec {
   }
 
   test("the served session is the GraftSession engine: every engineConf, " +
-       "shuffle width from SPARK_GRAFT_CPUS else the core count") {
+       "shuffle width from SPARK_GRAFT_CPUS else the core count (local) " +
+       "or 32 (cluster)") {
     // the builder's pending options (JVM-public accessor): reading them
     // pins the definition without starting a second session in this JVM
     def options(env: Map[String, String]): Map[String, String] = {
@@ -351,5 +352,10 @@ class CliSpec extends SparkSpec {
       "SPARK_GRAFT_CPUS" -> "8"))
     assert(set("spark.master") == "local[2]")
     assert(set("spark.sql.shuffle.partitions") == "8")
+    val cluster = options(Map("SPARK_MASTER" -> "spark://head:7077"))
+    assert(cluster("spark.master") == "spark://head:7077")
+    assert(cluster("spark.sql.shuffle.partitions") == "32")
+    assert(options(Map("SPARK_MASTER" -> "spark://head:7077",
+      "SPARK_GRAFT_CPUS" -> "64"))("spark.sql.shuffle.partitions") == "64")
   }
 }

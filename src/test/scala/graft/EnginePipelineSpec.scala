@@ -42,6 +42,25 @@ class EnginePipelineSpec extends SparkSpec {
     assert(r.getAs[Double]("val") == 1.23)
   }
 
+  test("storableTimestamp agrees with what append stores at both ends " +
+       "of the range; a nanosecond timestamp is out of it") {
+    val edge = 9223372036854000L // Long.MaxValue µs, in whole seconds, as ms
+    val candidates = Seq(0L, 1700000000000L, edge, edge + 998, edge + 999,
+      edge + 1000, 1700000000000000000L, Long.MaxValue)
+      .flatMap(ms => Seq(ms, -ms))
+    val dir = java.nio.file.Files.createTempDirectory("graft_tsrange")
+    candidates.zipWithIndex.foreach { case (ms, i) =>
+      val stores = scala.util.Try(WritePipeline.append(
+        WritePipeline.toMetricRows(
+          Seq(Sample("m", Map("__name__" -> "m"), 1.0, ms)).toDF()),
+        s"$dir/t$i", rowsHint = 1L)).isSuccess
+      assert(WritePipeline.storableTimestamp(ms) == stores, s"$ms ms")
+    }
+    assert(WritePipeline.storableTimestamp(edge))
+    assert(!WritePipeline.storableTimestamp(edge + 1000))
+    assert(!WritePipeline.storableTimestamp(1700000000000000000L))
+  }
+
   test("full read: fixture query returns 2 series with 1 sample each") {
     val metrics = WritePipeline.toMetricRows(WritePipeline.dropNonFinite(fixture))
     val q = PromQuery(fixtureTs - 60000, fixtureTs + 60000,

@@ -12,10 +12,12 @@ import scala.jdk.CollectionConverters._
 class GroupCommitSpec extends AnyFunSuite {
 
   /** A fake commit: records each group, blocks its FIRST call on
-    * `release`, throws for groups containing `poison`, and marks items
-    * done only after the (possibly blocked) work has finished. */
+    * `release`, throws for groups containing `poison` and for every
+    * group while `broken` is set, and marks items done only after the
+    * (possibly blocked) work has finished. */
   private class Fake(poison: Int = -1) {
     val lock = new Object
+    @volatile var broken = false
     val groups = new ConcurrentLinkedQueue[Seq[Int]]()
     val done = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val entered = new CountDownLatch(1)
@@ -26,7 +28,9 @@ class GroupCommitSpec extends AnyFunSuite {
         entered.countDown()
         assert(release.await(30, TimeUnit.SECONDS))
       }
-      if (items.contains(poison)) throw new IllegalStateException("disk full")
+      if (broken) throw new IllegalStateException("disk full")
+      if (items.contains(poison))
+        throw new IllegalArgumentException(s"bad item $poison")
       items.foreach(done.add)
     })
   }
@@ -87,8 +91,8 @@ class GroupCommitSpec extends AnyFunSuite {
       "every item committed exactly once")
   }
 
-  test("a commit that throws fails every caller in its group; the next " +
-       "group still commits") {
+  test("a commit that rejects one item fails only that item's caller; " +
+       "the rest of its group and the next group commit") {
     val f = new Fake(poison = 3)
     val k = 4
     withPool(k + 2) { pool =>
@@ -98,15 +102,47 @@ class GroupCommitSpec extends AnyFunSuite {
       awaitQueued(f.gc, k)
       f.release.countDown()
       assert(first.get(30, TimeUnit.SECONDS) == Right(true))
-      group.foreach { r =>
+      group.zip(1 to k).foreach { case (r, i) =>
         val out = r.get(30, TimeUnit.SECONDS)
-        assert(out.swap.exists(_.getMessage == "disk full"), out)
+        if (i == 3) assert(out.swap.exists(_.getMessage == "bad item 3"), out)
+        else assert(out == Right(true), s"item $i: $out")
       }
       assert(submit(pool, f, 99).get(30, TimeUnit.SECONDS) == Right(true))
     }
-    assert(f.groups.asScala.toList.map(_.sorted) ==
-      List(Seq(0), (1 to k).toList, Seq(99)))
-    assert((1 to k).forall(i => !f.done.contains(i)))
+    // the failed group is recommitted one member at a time
+    val groups = f.groups.asScala.toList
+    assert(groups.head == Seq(0) && groups.last == Seq(99))
+    assert(groups(1).sorted == (1 to k).toList)
+    assert(groups.slice(2, 2 + k).sortBy(_.head) == (1 to k).map(Seq(_)))
+    assert(groups.size == 3 + k)
+    assert(f.done.asScala.toSet == Set(0, 1, 2, 4, 99))
+  }
+
+  test("a commit that always throws fails every caller in its group; " +
+       "the next group still commits") {
+    val f = new Fake()
+    val k = 4
+    withPool(k + 2) { pool =>
+      val first = submit(pool, f, 0)
+      assert(f.entered.await(30, TimeUnit.SECONDS))
+      val group = (1 to k).map(i => submit(pool, f, i))
+      awaitQueued(f.gc, k)
+      f.broken = true
+      f.release.countDown()
+      (first +: group).foreach { r =>
+        val out = r.get(30, TimeUnit.SECONDS)
+        assert(out.swap.exists(_.getMessage == "disk full"), out)
+      }
+      f.broken = false
+      assert(submit(pool, f, 99).get(30, TimeUnit.SECONDS) == Right(true))
+    }
+    // the group of k, then each of its members alone, then the next group
+    val groups = f.groups.asScala.toList
+    assert(groups.head == Seq(0) && groups.last == Seq(99))
+    assert(groups(1).sorted == (1 to k).toList)
+    assert(groups.slice(2, 2 + k).sortBy(_.head) == (1 to k).map(Seq(_)))
+    assert(groups.size == 3 + k)
+    assert(f.done.asScala.toSet == Set(99))
   }
 
   test("other holders of the lock serialize with the groups") {

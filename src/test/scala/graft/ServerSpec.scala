@@ -302,6 +302,27 @@ class ServerSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  /** POST one snappy WriteRequest to `/write`, as RW 2.0 when `v2`;
+    * returns the status and the samples-written header. */
+  private def postWrite(base: String, wr: PWriteRequest,
+                        v2: Boolean): (Int, Option[String]) = {
+    val conn = java.net.URI.create(s"$base/write").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod("POST")
+    conn.setDoOutput(true)
+    val body =
+      if (v2) {
+        conn.setRequestProperty("Content-Type",
+          "application/x-protobuf;proto=io.prometheus.write.v2.Request")
+        graft.codec.Prompb2.encodeRequest(graft.codec.Prompb2.fromV1(wr))
+      } else Prompb.encodeWriteRequest(wr)
+    conn.getOutputStream.write(Prompb.snappyCompress(body))
+    val out = (conn.getResponseCode, Option(conn.getHeaderField(
+      "X-Prometheus-Remote-Write-Samples-Written")))
+    conn.disconnect()
+    out
+  }
+
   test("serve: 8 concurrent /write batches commit as one group — every " +
        "row stored exactly once, v2 written-stats stay per request") {
     val table = Files.createTempDirectory("graft_srvgc").toString + "/metrics"
@@ -320,24 +341,8 @@ class ServerSpec extends SparkSpec {
             86400000L * (j + 1) + i * 1000L)))
       })
     }
-    def send(i: Int): (Int, Option[String]) = {
-      val conn = java.net.URI.create(s"$base/write").toURL
-        .openConnection().asInstanceOf[HttpURLConnection]
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      val body =
-        if (i % 2 == 1) {
-          conn.setRequestProperty("Content-Type",
-            "application/x-protobuf;proto=io.prometheus.write.v2.Request")
-          graft.codec.Prompb2.encodeRequest(
-            graft.codec.Prompb2.fromV1(batches(i)))
-        } else Prompb.encodeWriteRequest(batches(i))
-      conn.getOutputStream.write(Prompb.snappyCompress(body))
-      val out = (conn.getResponseCode, Option(conn.getHeaderField(
-        "X-Prometheus-Remote-Write-Samples-Written")))
-      conn.disconnect()
-      out
-    }
+    def send(i: Int): (Int, Option[String]) =
+      postWrite(base, batches(i), v2 = i % 2 == 1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       // hold the commit lock until all 8 requests are queued behind it:
@@ -382,6 +387,59 @@ class ServerSpec extends SparkSpec {
       // one group → one commit → one `updated` value for all its rows
       assert(spark.read.parquet(table).select("updated").distinct()
         .count() == 1)
+    } finally { pool.shutdownNow(); server.stop() }
+  }
+
+  test("serve: a request with an out-of-range timestamp, sent with a " +
+       "group of valid ones, loses only its own rows") {
+    val table = Files.createTempDirectory("graft_srvgcbad").toString + "/metrics"
+    val server = new Server(spark, table).start()
+    val base = s"http://localhost:${server.boundPort}"
+    def batch(tag: String, tsMs: Int => Long): PWriteRequest =
+      PWriteRequest(Seq(PTimeSeries(
+        Seq(PLabel("__name__", "gc_bad"), PLabel("batch", tag)),
+        (0 until 3).map(j => PSample(j + 0.5, tsMs(j))))))
+    val good = (0 until 3).map(i =>
+      batch(s"g$i", j => 86400000L * (j + 1) + i * 1000L))
+    // a sender that put NANOseconds in the ms field: past what
+    // timestamp_seconds can convert (the rest of its samples are fine)
+    val bad = batch("bad", j =>
+      if (j == 1) 1700000000000000000L else 86400000L * (j + 1))
+    val sends = (good.zipWithIndex.map { case (wr, i) => (wr, i % 2 == 1) }
+      :+ (bad -> true))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      // hold the commit lock until the valid requests queue behind it,
+      // so they commit as one group
+      val pending = server.appendLock.synchronized {
+        val fs = sends.map { case (wr, v2) => pool.submit(
+          new java.util.concurrent.Callable[(Int, Option[String])] {
+            def call(): (Int, Option[String]) = postWrite(base, wr, v2)
+          })
+        }
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (server.sampleCommits.queued < good.size) {
+          assert(System.nanoTime() < deadline,
+            s"${server.sampleCommits.queued} of ${good.size} requests queued")
+          Thread.sleep(10)
+        }
+        fs
+      }
+      val replies = pending.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(replies.map(_._1) == Seq.fill(4)(200))
+      // the valid v2 request reports its own rows, the bad one none
+      assert(replies(1)._2.contains("3"))
+      assert(replies(3)._2.contains("0"))
+      val stored = spark.read.parquet(table).collect().toSeq.map { r =>
+        (r.getAs[scala.collection.Seq[String]]("tags").mkString(","),
+          r.getAs[java.sql.Timestamp]("ts").getTime / 1000,
+          r.getAs[Double]("val"))
+      }
+      val expected = for {
+        b <- good; ts <- b.timeseries; smp <- ts.samples
+      } yield (ts.labels.map(l => s"${l.name}=${l.value}").sorted.mkString(","),
+        smp.timestampMs / 1000, smp.value)
+      assert(stored.sortBy(_.toString) == expected.sortBy(_.toString))
     } finally { pool.shutdownNow(); server.stop() }
   }
 
